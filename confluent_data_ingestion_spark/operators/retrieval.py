@@ -54,6 +54,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..caching import release_checkpoint
+
 
 @dataclass(frozen=True)
 class BM25Index:
@@ -88,14 +90,7 @@ class BM25Index:
         until JVM GC.  No-op per frame when nothing was materialized.
         """
         for frame in (self.postings, self.doclen, self.df):
-            _release_checkpoint(frame)
-
-
-def _release_checkpoint(frame: DataFrame) -> None:
-    """Free a localCheckpointed DataFrame's RDD blocks (best-effort)."""
-    from ..caching import release_checkpoint
-
-    release_checkpoint(frame)
+            release_checkpoint(frame)
 
 
 def bm25_index(

@@ -32,10 +32,6 @@ def _dot(a: str, b: str) -> str:
     return DOT.format(a=a, b=b)
 
 
-def with_norm(df: DataFrame, vec_col: str = "e", out_col: str = "norm") -> DataFrame:
-    return df.withColumn(out_col, F.expr(f"sqrt({_dot(vec_col, vec_col)})"))
-
-
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,

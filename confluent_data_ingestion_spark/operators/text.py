@@ -662,22 +662,6 @@ def bigram_pair_positions(
     )
 
 
-def bigram_pair_tf(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document adjacent-pair term frequencies —
-    ``(id_col, w1, w2, tf)`` over raw tokens (no vocabulary mapping).
-    Kept for callers that need the aggregated per-doc table itself; the
-    bigram scorer and PMI work from ``bigram_pair_positions`` directly
-    (their sums are distributive over positions, so the per-doc
-    aggregation's corpus-scale shuffle buys them nothing)."""
-    return bigram_pair_positions(df, text_col, id_col).groupBy(
-        id_col, "w1", "w2"
-    ).agg(F.count(F.lit(1)).alias("tf"))
-
-
 def bigram_logprob_score(
     df: DataFrame,
     text_col: str = "text",
@@ -685,7 +669,6 @@ def bigram_logprob_score(
     lam: float = 0.7,
     vocab_size: int | None = None,
     oov_token: str = "<unk>",
-    pair_tf: DataFrame | None = None,
 ) -> DataFrame:
     """Interpolated-bigram log-probability per document — one step up from
     ``unigram_logprob_score`` toward real perplexity filtering: word-order
@@ -737,8 +720,7 @@ def bigram_logprob_score(
     # exactly for decimal x integer), and the position form skips the
     # per-doc TF aggregation — the one corpus-scale shuffle
     raw_tf = (
-        pair_tf if pair_tf is not None
-        else bigram_pair_positions(df, text_col, id_col)
+        bigram_pair_positions(df, text_col, id_col)
         .withColumn("tf", F.lit(1).cast("bigint"))
         # no-op filter (split() never yields NULL tokens), stated
         # explicitly so every consumer of `big` below infers the same
@@ -834,7 +816,6 @@ def collocation_pmi(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_count: int = 5,
-    pair_tf: DataFrame | None = None,
 ) -> DataFrame:
     """Collocation extraction via pointwise mutual information over
     ADJACENT token pairs: PMI(w1,w2) = ln(N * c(w1,w2) / (c(w1,*) *
@@ -859,34 +840,29 @@ def collocation_pmi(
 
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    if pair_tf is not None:
-        # fold the shared per-doc pair table to corpus counts: sum of
-        # per-doc tf == direct pair count, same integers
-        big = pair_tf.groupBy("w1", "w2").agg(F.sum("tf").alias("n_pair"))
-    else:
-        df = ensure_min_parallelism(df)
-        toks = df.select(F.split(F.col(text_col), " ").alias("__ts__"))
-        pairs = toks.select(
-            "__ts__",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(__ts__) >= 2 THEN sequence(1, size(__ts__) - 1) "
-                    "ELSE CAST(array() AS array<int>) END"
-                )
-            ).alias("__i__"),
-        ).select(
-            F.expr("element_at(__ts__, __i__)").alias("w1"),
-            F.expr("element_at(__ts__, __i__ + 1)").alias("w2"),
-        ).filter(
-            # semantically a no-op (split() never yields NULL elements);
-            # placed EXPLICITLY so the four consumers of `big` (the
-            # min_count arm, ctx, uni, tot) infer identical subtrees —
-            # otherwise each join infers a DIFFERENT isnotnull subset,
-            # the canonical plans diverge, AQE stage reuse misses, and
-            # the corpus explode runs once per consumer (measured 4x)
-            F.col("w1").isNotNull() & F.col("w2").isNotNull()
-        )
-        big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
+    df = ensure_min_parallelism(df)
+    toks = df.select(F.split(F.col(text_col), " ").alias("__ts__"))
+    pairs = toks.select(
+        "__ts__",
+        F.explode(
+            F.expr(
+                "CASE WHEN size(__ts__) >= 2 THEN sequence(1, size(__ts__) - 1) "
+                "ELSE CAST(array() AS array<int>) END"
+            )
+        ).alias("__i__"),
+    ).select(
+        F.expr("element_at(__ts__, __i__)").alias("w1"),
+        F.expr("element_at(__ts__, __i__ + 1)").alias("w2"),
+    ).filter(
+        # semantically a no-op (split() never yields NULL elements);
+        # placed EXPLICITLY so the four consumers of `big` (the
+        # min_count arm, ctx, uni, tot) infer identical subtrees —
+        # otherwise each join infers a DIFFERENT isnotnull subset,
+        # the canonical plans diverge, AQE stage reuse misses, and
+        # the corpus explode runs once per consumer (measured 4x)
+        F.col("w1").isNotNull() & F.col("w2").isNotNull()
+    )
+    big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
     ctx = big.groupBy("w1").agg(F.sum("n_pair").alias("c1"))
     uni = big.groupBy("w2").agg(F.sum("n_pair").alias("cu"))
     tot = uni.agg(F.sum("cu").alias("n"))

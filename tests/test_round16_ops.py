@@ -1,7 +1,5 @@
-"""Round-16 regression tests: the r15 verdict's open items — bench
-artifact-family eviction (the medium: a builder row's min-of-2 rerun
-must not serve the session cache and drop the build cost from the map),
-the UniqueKeyMonitor column-identity/empty-path fixes, per-round
+"""Round-16 regression tests: the r15 verdict's open items — the
+UniqueKeyMonitor column-identity/empty-path fixes, per-round
 convergence probing in the star-contraction cap region, the Dawid-Skene
 bigint exactness precondition, and the bitext corpus-drift width pin."""
 
@@ -12,6 +10,7 @@ import tempfile
 import pytest
 
 import confluent_data_ingestion_spark.queries as Q
+from confluent_data_ingestion_spark.caching import SessionArtifact
 from confluent_data_ingestion_spark.operators.cluster import (
     connected_components,
 )
@@ -19,58 +18,6 @@ from confluent_data_ingestion_spark.operators.labels import dawid_skene
 from confluent_data_ingestion_spark.streaming.contracts import (
     UniqueKeyMonitor,
 )
-
-
-# ---------------------------------------------------------------------------
-# shared-artifact families: the bench rerun's eviction seam
-# ---------------------------------------------------------------------------
-
-
-def test_artifact_family_build_is_observable_and_evictable(spark, sf_dir):
-    """The bench loop diffs artifact_family_keys() around a query's
-    first timing run to learn what it BUILT, then evicts exactly those
-    families before the rerun — so a builder row's recorded min pays
-    the build both times, instead of recording the cache hit (r15
-    verdict: dedup_simhash_pairs recorded 0.015 s while the 3.7 s
-    signature build appeared in no row)."""
-    Q.release_artifact_families(["bpe"])  # fresh regardless of test order
-    before = Q.artifact_family_keys()
-    assert before["bpe"] == frozenset()
-
-    Q._bpe_shared_merges(spark, sf_dir)
-    built = [
-        fam for fam, keys in Q.artifact_family_keys().items()
-        # the reader-plan memo ('tables') is populated lazily by ANY _t
-        # call, so whether it shows up here depends on test order — the
-        # frame-artifact accounting under test must not
-        if keys - before[fam] and fam != "tables"
-    ]
-    assert built == ["bpe"]
-
-    assert Q.release_artifact_families(built) == 1
-    assert Q.artifact_family_keys()["bpe"] == frozenset()
-
-    # a consumer after eviction rebuilds transparently (same rows)
-    merges = Q._bpe_shared_merges(spark, sf_dir)
-    assert merges.count() > 0
-    assert Q.artifact_family_keys()["bpe"] != frozenset()
-
-
-def test_release_artifact_families_unknown_name_fails_loudly():
-    with pytest.raises(KeyError):
-        Q.release_artifact_families(["no_such_family"])
-
-
-def test_artifact_registry_covers_every_session_cache():
-    """Every module-level artifact cache in the query registry must be
-    reachable through ARTIFACT_FAMILIES — a new cache added without an
-    evictor would silently reopen the bench attribution hole."""
-    registered = {id(c) for c, _evict in Q.ARTIFACT_FAMILIES.values()}
-    for name in dir(Q):
-        if name.endswith("_CACHE") and isinstance(getattr(Q, name), dict):
-            assert id(getattr(Q, name)) in registered, (
-                f"{name} is not registered in ARTIFACT_FAMILIES"
-            )
 
 
 # ---------------------------------------------------------------------------
@@ -168,21 +115,16 @@ def test_dawid_skene_enforces_class_count_bound(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_bitext_corpus_drift_fails_loudly(spark, sf_dir):
+def test_bitext_corpus_drift_fails_loudly(spark, sf_dir, monkeypatch):
     """The registry row's DuckDB oracle hard-pins width-4 band keys; if
     the corpus grows into the width-8 regime the row must raise, not
-    silently hash-mismatch (r15 ADVICE).  Simulated via the memoized
-    corpus count the row feeds to the auto-width law."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    old = dict(Q._EMB_COUNT_CACHE)
-    try:
-        Q._EMB_COUNT_CACHE.clear()
-        Q._EMB_COUNT_CACHE[key] = 500_000  # width-8+ regime
-        with pytest.raises(AssertionError, match="re-pin the oracle"):
-            Q.QUERIES["bitext_mutual_margin"](spark, sf_dir)
-    finally:
-        Q._EMB_COUNT_CACHE.clear()
-        Q._EMB_COUNT_CACHE.update(old)
+    silently hash-mismatch.  Simulated by swapping in a
+    corpus-count artifact whose build reports a width-8+ corpus."""
+    monkeypatch.setattr(
+        Q, "_emb_count", SessionArtifact(lambda spark, sf_dir: 500_000)
+    )
+    with pytest.raises(AssertionError, match="re-pin the oracle"):
+        Q.QUERIES["bitext_mutual_margin"](spark, sf_dir)
 
 
 def test_bitext_row_memoizes_corpus_count(spark, sf_dir):
@@ -192,7 +134,8 @@ def test_bitext_row_memoizes_corpus_count(spark, sf_dir):
     Q.release_artifact_families(["emb_count"])
     df = Q.QUERIES["bitext_mutual_margin"](spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
-    assert Q._EMB_COUNT_CACHE.get(key, 0) > 0
+    assert Q.artifact_family_keys()["emb_count"] == {key}
+    assert Q._emb_count(spark, sf_dir) > 0
     assert df.columns == ["a_id", "b_id", "cosine", "margin"]
 
 

@@ -674,7 +674,7 @@ def main() -> None:
         # the steady-state per-query-batch cost, bounded by the query
         # terms' posting lists)
         def bm25_cold(spark, sf_dir, reps):
-            _Q._BM25_CACHE.clear()
+            _Q.release_artifact_families(["bm25"])
             return REGISTRY["bm25_topk_docs"](spark, sf_dir)
 
         probes.append(("bm25_index_build_topk", bm25_cold))
@@ -717,7 +717,7 @@ def main() -> None:
         # posting build's true token-linear slope from the dedup blowup's
         # x reps type-table growth
         def bm25_fv(spark, sf_dir, reps):
-            _Q._BM25_CACHE.clear()
+            _Q.release_artifact_families(["bm25"])
             d = sf_dir if reps == 1 else f"{sf_dir}/fv"
             return REGISTRY["bm25_topk_docs"](spark, d)
 

@@ -117,7 +117,7 @@ def main() -> None:
     def _clear_layout_cache():
         from confluent_data_ingestion_spark import queries as _q
 
-        _q._SKIPSCAN_CACHE.clear()
+        _q.release_artifact_families(["skipscan"])
 
     pre_hooks = {"zorder_rewrite": _clear_layout_cache}
 
