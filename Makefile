@@ -1,7 +1,7 @@
 # Convenience targets for the verification surface (see USAGE.md and
 # .claude/skills/verify/SKILL.md for the full driver contract).
 
-.PHONY: test correctness correctness-sf01 bench audit plan-fixture smoke verify
+.PHONY: test perfbench-test correctness correctness-sf01 bench audit plan-fixture smoke verify
 
 # the tier-1 gate from ROADMAP.md: every test, all cores, no early stop
 test:
@@ -9,6 +9,11 @@ test:
 		SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q \
 		--continue-on-collection-errors -p no:cacheprovider
+
+# the benchmark's own tests (tier-1 covers only tests/); the traced
+# etl_batch run there asserts the envelope's text is scanned exactly once
+perfbench-test:
+	python3 -m pytest perfbench/test_perfbench.py -q
 
 correctness:
 	python tools/check_correctness.py

@@ -18,13 +18,18 @@ but producing Catalyst logical plans instead of SQL text:
               anti-join rather than a post-filter).
 
 Every compiled stage is a lazy DataFrame — Catalyst sees the whole pipeline
-and optimizes across stages (filter pushdown through dedup windows, shared
-scans when materialized via the statement-set runtime).
+and optimizes across stages (filter pushdown through dedup windows).
+``PipelineCompiler.iter_compile`` yields the targets one by one in
+dependency order, so a runtime can materialize a target before anything
+downstream is built: the statement-set runtime checkpoints every target
+read by two or more consumers (its own sink write counts as one), which
+computes each shared plan once; a target read once stays inlined.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +40,14 @@ from ..operators.fgac import lookup_join
 from ..operators.xref import latest_by_key
 from ..spec.models import MappingRow, PipelineSpec
 from ..spec.validate import has_errors, validate_spec
+
+
+def target_deps(table: str, rows: list[MappingRow]) -> set[str]:
+    """Relations a target reads: its source and lookup-join tables."""
+    deps = {r.source_table for r in rows if r.source_table}
+    deps |= {r.join_table for r in rows if r.join_table}
+    deps.discard(table)
+    return deps
 
 
 def xref_dedup_spec(rows: list[MappingRow]):
@@ -259,11 +272,18 @@ class PipelineCompiler:
             "QUARANTINE": self._build_quarantine,
         }
 
-    def compile(self) -> dict[str, DataFrame]:
-        """Compile every target, deferring tables whose upstream targets
-        aren't compiled yet (v22 workbooks reference sibling XREF tables in
-        arbitrary sheet order; Flink resolves lazily from SQL text, we
-        resolve eagerly so we topo-order here)."""
+    def iter_compile(self) -> Iterator[tuple[str, list[MappingRow], DataFrame]]:
+        """Build every target in dependency order, yielding
+        ``(table, rows, df)`` right after each one is built and bound in
+        ``self.compiled``.
+
+        Targets whose upstream targets aren't built yet are deferred (v22
+        workbooks reference sibling XREF tables in arbitrary sheet order;
+        Flink resolves lazily from SQL text, we resolve eagerly so we
+        topo-order here).  A spec that resolves in stage order is yielded
+        in stage order.  A caller may rebind ``self.compiled[table]``
+        before resuming — to a checkpoint, or to an upsert snapshot —
+        and every target built afterwards reads the rebound frame."""
         builders = self._builders()
         pending = list(self.spec.tables().items())
         pending_names = {t for t, _ in pending}
@@ -271,25 +291,29 @@ class PipelineCompiler:
             remaining = []
             progressed = False
             for table, rows in pending:
-                deps = {r.source_table for r in rows if r.source_table}
-                deps |= {r.join_table for r in rows if r.join_table}
-                deps -= {table}
                 unresolved = [
-                    d for d in deps
+                    d for d in target_deps(table, rows)
                     if d in pending_names and d not in self.compiled
                 ]
                 if unresolved:
                     remaining.append((table, rows))
                     continue
-                self.compiled[table] = builders[rows[0].pipeline_stage](table, rows)
+                df = builders[rows[0].pipeline_stage](table, rows)
+                self.compiled[table] = df
                 pending_names.discard(table)
                 progressed = True
+                yield table, rows, df
             if not progressed:
                 raise ValueError(
                     "circular or unresolvable table references among "
                     f"{sorted(t for t, _ in remaining)}"
                 )
             pending = remaining
+
+    def compile(self) -> dict[str, DataFrame]:
+        """Compile every target lazily (see :meth:`iter_compile`)."""
+        for _ in self.iter_compile():
+            pass
         return self.compiled
 
 

@@ -5,10 +5,19 @@ The reference wraps all INSERTs in ``EXECUTE STATEMENT SET BEGIN … END`` so
 Flink plans one job with shared scans (``scripts/sttm_to_flink_v22.py:
 391-398``).  Spark's equivalent patterns, both implemented here:
 
- - batch:     persist the raw envelope once, write every compiled target
-   sequentially from the cached scan, unpersist.
+ - batch:     persist the raw envelope once (unless the caller already
+   did), then walk the targets in dependency order
+   (``PipelineCompiler.iter_compile``).  A target whose plan would
+   otherwise run more than once — read by two or more consumers, its own
+   sink write counting as one; in the paper's spec every XREF an FGAC or
+   QUARANTINE target joins — is ``localCheckpoint``-ed eagerly right
+   after it is built; its sink is written from the checkpoint and
+   downstream targets are built against it.  A target read once stays
+   inlined so Catalyst can still push filters into it.  The checkpoint
+   blocks and the envelope cache are freed when the set finishes.
  - streaming: ONE ``foreachBatch`` query; each microbatch is persisted,
-   every stage is compiled against it, XREF targets are upserted into a
+   every stage is compiled against it in the same dependency order,
+   XREF targets are upserted into a
    changelog snapshot store, and FGAC/QUARANTINE stages join against the
    *post-upsert global snapshot* (stream-static per microbatch — the Spark
    rendering of Flink's changelog join, reference J6/T3,
@@ -21,16 +30,23 @@ Scale notes: per microbatch the work is bounded by |batch| for views,
 |batch| log-append for XREF, and |batch| ⨝ snapshot for FGAC (the snapshot
 side is latest-per-key, i.e. bounded by live keys, and is typically
 broadcast-able after dedup).  Nothing here collects to the driver; the
-transaction markers make foreachBatch retries idempotent (PR-3).
+transaction markers make foreachBatch retries idempotent (PR-3).  In batch
+mode a checkpointed XREF snapshot is bounded by live keys and its blocks
+spill MEMORY_AND_DISK; local checkpoint blocks cannot be rebuilt from
+lineage, so losing an executor fails the statement set — a rerun is
+idempotent because ``run_batch`` overwrites its sinks.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.compiler import PipelineCompiler, xref_dedup_spec
+from ..caching import release_checkpoint
+from ..plans.compiler import PipelineCompiler, target_deps, xref_dedup_spec
 from ..spec.models import PipelineSpec
 from .upsert import UpsertSnapshot
 
@@ -72,24 +88,42 @@ class StatementSetRunner:
     # -- batch mode ----------------------------------------------------------
 
     def run_batch(self, raw_df: DataFrame, write_views: bool = False) -> dict[str, str]:
-        """Persist the shared envelope scan, write every compiled target."""
-        raw_df = raw_df.persist()
+        """Write every compiled target from one shared envelope scan,
+        computing each shared target's plan once (module docstring)."""
+        tables = self.spec.tables()
+        written = {
+            t for t, rows in tables.items()
+            if write_views or rows[0].pipeline_stage != "VIEW"
+        }
+        readers = Counter(
+            d for t, rows in tables.items() for d in target_deps(t, rows)
+        )
+        # a caller's own cache outlives the call: only drop what we persist
+        owns_cache = raw_df.storageLevel == StorageLevel.NONE
+        if owns_cache:
+            raw_df = raw_df.persist()
+        checkpoints: list[DataFrame] = []
         try:
             compiler = PipelineCompiler(
                 self.spark, self.spec,
                 {self.spec.raw_table: raw_df, **self.static_sources},
             )
-            compiled = compiler.compile()
             paths: dict[str, str] = {}
-            for table, df in compiled.items():
-                if self.spec.stage_of(table) == "VIEW" and not write_views:
-                    continue
-                path = self.table_path(table)
-                df.write.mode("overwrite").parquet(path)
-                paths[table] = path
+            for table, _, df in compiler.iter_compile():
+                if readers[table] + (table in written) > 1:
+                    df = df.localCheckpoint(eager=True)
+                    checkpoints.append(df)
+                    compiler.compiled[table] = df
+                if table in written:
+                    path = self.table_path(table)
+                    df.write.mode("overwrite").parquet(path)
+                    paths[table] = path
             return paths
         finally:
-            raw_df.unpersist()
+            for df in checkpoints:
+                release_checkpoint(df)
+            if owns_cache:
+                raw_df.unpersist()
 
     # -- streaming mode ------------------------------------------------------
 
@@ -140,9 +174,8 @@ class StatementSetRunner:
             )
             from pyspark.sql import functions as F
 
-            for table, rows in self.spec.tables().items():  # stage-ordered
+            for table, rows, df in compiler.iter_compile():
                 stage = rows[0].pipeline_stage
-                df = compiler._builders()[stage](table, rows)
                 if self.capture_plans:
                     try:  # plan capture must never fail the batch
                         self.last_batch_plans[f"{stage} {table}"] = (
@@ -151,8 +184,8 @@ class StatementSetRunner:
                     except Exception:  # pragma: no cover
                         pass
                 if stage == "VIEW":
-                    compiler.compiled[table] = df
-                elif stage == "XREF":
+                    continue  # inlined into its consumers, no sink
+                if stage == "XREF":
                     store = self._xref_store(table, rows)
                     store.upsert(df, batch_id=f"{table}-{batch_id}")
                     # Delta-driven changelog propagation (reference J6/T3):
@@ -179,7 +212,6 @@ class StatementSetRunner:
                         )
                     else:  # reject/append streams
                         self._append_once(df, table, batch_id)
-                    compiler.compiled[table] = df
         finally:
             batch_df.unpersist()
 

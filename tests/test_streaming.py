@@ -236,6 +236,155 @@ def test_statement_set_restart_is_noop(spark, tmp_path):
     assert log_count == log_count2  # nothing re-appended
 
 
+# ---------------------------------------------------------------------------
+# Statement-set runner: dependency order, and each shared target computed once
+# ---------------------------------------------------------------------------
+def _sibling_xref_spec():
+    """XREF_B lookup-joins its sibling XREF_Z, which sorts after it: stage
+    order cannot resolve the spec, dependency order can."""
+    def R(**kw):
+        return kw
+
+    return load_spec([
+        R(PipelineStage="VIEW", TargetTable="V_ACCT", TargetColumn="acct_id",
+          TargetDataType="BIGINT", IsTargetPK="Y", FieldSelector="acct_id",
+          FilterPredicate="JSON_VALUE(CAST(val AS STRING), '$.tbl') = 'acct'"),
+        R(PipelineStage="VIEW", TargetTable="V_ACCT", TargetColumn="seq",
+          TargetDataType="BIGINT", FieldSelector="seq"),
+        R(PipelineStage="VIEW", TargetTable="V_ACCT", TargetColumn="status",
+          TargetDataType="STRING", FieldSelector="status"),
+        R(PipelineStage="XREF", TargetTable="XREF_B", TargetColumn="acct_id",
+          TargetDataType="BIGINT", IsTargetPK="Y", SourceTable="V_ACCT",
+          SourceAlias="s", FieldSelector="s.acct_id", OrderByFields="seq",
+          JoinTable="XREF_Z", JoinAlias="z", JoinType="INNER",
+          JoinCondition="s.acct_id = z.acct_id"),
+        R(PipelineStage="XREF", TargetTable="XREF_B", TargetColumn="z_status",
+          SourceTable="V_ACCT", FieldSelector="z.status"),
+        R(PipelineStage="XREF", TargetTable="XREF_Z", TargetColumn="acct_id",
+          TargetDataType="BIGINT", IsTargetPK="Y", SourceTable="V_ACCT",
+          FieldSelector="acct_id", OrderByFields="seq"),
+        R(PipelineStage="XREF", TargetTable="XREF_Z", TargetColumn="status",
+          SourceTable="V_ACCT", FieldSelector="status"),
+    ])
+
+
+def _sorted_rows(df, columns=None):
+    return sorted(map(tuple, df.select(*(columns or df.columns)).collect()))
+
+
+def test_statement_set_sibling_xref_out_of_sheet_order(spark, tmp_path):
+    src = str(tmp_path / "msgs")
+    _write_envelope_files(src)
+    spec = _sibling_xref_spec()
+    assert list(spec.tables()) == ["V_ACCT", "XREF_B", "XREF_Z"]
+
+    batch = StatementSetRunner(spark, spec, {}, str(tmp_path / "out_batch"))
+    raw = spark.read.text(src).select(F.col("value").alias("val"))
+    batch_paths = batch.run_batch(raw)
+    stream = StatementSetRunner(spark, spec, {}, str(tmp_path / "out_stream"))
+    stream.run_streaming(file_envelope_stream(spark, src, max_files_per_trigger=1))
+
+    assert set(batch_paths) == {"XREF_B", "XREF_Z"}
+    for table, path in batch_paths.items():
+        b = spark.read.parquet(path)
+        s = spark.read.parquet(stream.table_path(table))
+        assert b.count() == 7, table
+        assert _sorted_rows(s, b.columns) == _sorted_rows(b), table
+    # XREF_B carries its sibling's latest status for every account
+    assert {(r["acct_id"], r["z_status"]) for r in
+            spark.read.parquet(batch_paths["XREF_B"]).collect()} == {
+        (r["acct_id"], r["status"]) for r in
+        spark.read.parquet(batch_paths["XREF_Z"]).collect()}
+
+
+@pytest.mark.parametrize("make_spec", [_pipeline_spec, _sibling_xref_spec],
+                         ids=["pipeline", "sibling_xref"])
+def test_run_batch_equals_per_target_writes(spark, tmp_path, make_spec):
+    from confluent_data_ingestion_spark.plans import compile_pipeline
+
+    src = str(tmp_path / "msgs")
+    _write_envelope_files(src)
+    dim = spark.createDataFrame([Row(id=i, segment=f"seg{i % 2}") for i in range(10)])
+    spec = make_spec()
+    raw = spark.read.text(src).select(F.col("value").alias("val"))
+    paths = StatementSetRunner(
+        spark, spec, {"dim": dim}, str(tmp_path / "batch")).run_batch(raw)
+
+    compiled = compile_pipeline(spark, spec, {"raw": raw, "dim": dim})
+    assert set(paths) == {t for t, rows in spec.tables().items()
+                          if rows[0].pipeline_stage != "VIEW"}
+    for table, path in paths.items():
+        ref = str(tmp_path / "ref" / table)
+        compiled[table].write.parquet(ref)
+        got, want = spark.read.parquet(path), spark.read.parquet(ref)
+        assert got.schema == want.schema, table
+        assert _sorted_rows(got) == _sorted_rows(want), table
+
+
+def test_run_batch_joins_read_the_shared_xref_checkpoint(spark, tmp_path, monkeypatch):
+    """XREF_ACCT is written and read by FGAC_ACCT and Q_ACCT: it is
+    computed once, and neither join recomputes its dedup window."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from confluent_data_ingestion_spark.plans import compile_pipeline
+
+    window = re.compile(r"\bWindow\b")
+    plans: dict[str, str] = {}
+    write_parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans[os.path.basename(path)] = (
+            self._df._jdf.queryExecution().optimizedPlan().toString())
+        return write_parquet(self, path, *args, **kwargs)
+
+    src = str(tmp_path / "msgs")
+    _write_envelope_files(src)
+    dim = spark.createDataFrame([Row(id=i, segment="s") for i in range(10)])
+    spec = _pipeline_spec()
+    raw = spark.read.text(src).select(F.col("value").alias("val"))
+    inlined = compile_pipeline(spark, spec, {"raw": raw, "dim": dim})
+    assert window.search(
+        inlined["FGAC_ACCT"]._jdf.queryExecution().optimizedPlan().toString())
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    StatementSetRunner(spark, spec, {"dim": dim}, str(tmp_path / "out")).run_batch(raw)
+    assert set(plans) == {"XREF_ACCT", "FGAC_ACCT", "Q_ACCT"}
+    for table in ("FGAC_ACCT", "Q_ACCT"):
+        assert not window.search(plans[table]), (table, plans[table])
+        assert "LogicalRDD" in plans[table], (table, plans[table])
+
+
+def test_run_batch_frees_its_blocks_and_keeps_the_callers_cache(spark, tmp_path):
+    from pyspark import StorageLevel
+    from test_caching import _persistent_rdd_ids
+
+    src = str(tmp_path / "msgs")
+    _write_envelope_files(src)
+    dim = spark.createDataFrame([Row(id=i, segment="s") for i in range(10)])
+    spec = _pipeline_spec()
+    runner = StatementSetRunner(spark, spec, {"dim": dim}, str(tmp_path / "out"))
+
+    base = _persistent_rdd_ids(spark)
+    raw = spark.read.text(src).select(F.col("value").alias("val"))
+    runner.run_batch(raw)
+    assert raw.storageLevel == StorageLevel.NONE  # its own envelope cache
+    assert not _persistent_rdd_ids(spark) - base  # and every checkpoint
+
+    cached = spark.read.text(src).select(F.col("value").alias("val")).persist()
+    level = cached.storageLevel
+    cached.count()
+    held = _persistent_rdd_ids(spark)
+    try:
+        runner.run_batch(cached)
+        assert cached.is_cached and cached.storageLevel == level
+        assert held - base <= _persistent_rdd_ids(spark)  # the caller's blocks
+        assert not _persistent_rdd_ids(spark) - held
+    finally:
+        cached.unpersist()
+
+
 def test_parse_state_ttl():
     from confluent_data_ingestion_spark.streaming.sources import parse_state_ttl
 
